@@ -25,6 +25,19 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # Tile the documents table so the convert stage dominates fixed overheads
 # (sf0.1 ships 5k docs; x8 = 40k MIME documents through the full pipeline).
 REPLICATE = int(os.environ.get("SPARK_GRAFT_KG_REPLICATE", "8"))
+# The headline analytical queries, timed in this order.
+HEADLINE = [
+    "q1_pricing_summary",
+    "q3_top_orders",
+    "q5_nation_revenue",
+    "window_top_order_per_customer",
+    "events_hourly",
+    "dedup_ngram_jaccard",
+    "dedup_minhash_pairs",
+    "ann_brute_topk",
+    "text_token_stats",
+    "text_fingerprint",
+]
 
 
 def main() -> int:
@@ -97,18 +110,6 @@ def main() -> int:
 
     # --- headline analytical queries (each timed to completion).
     qs = entrymod.queries()
-    headline = [
-        "q1_pricing_summary",
-        "q3_top_orders",
-        "q5_nation_revenue",
-        "window_top_order_per_customer",
-        "events_hourly",
-        "dedup_ngram_jaccard",
-        "dedup_minhash_pairs",
-        "ann_brute_topk",
-        "text_token_stats",
-        "text_fingerprint",
-    ]
     # Round-robin sweeps, not N consecutive attempts per query: the VM's
     # stall bands last minutes (r5 measured one clobber all 3 back-to-back
     # attempts of a 2-second query to 42 s), so consecutive attempts are
@@ -117,14 +118,14 @@ def main() -> int:
     # quiet window.
     best: dict[str, float] = {}
     for _sweep in range(4):
-        for name in headline:
+        for name in HEADLINE:
             t0 = time.monotonic()
             df = qs[name](spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             dt = time.monotonic() - t0
             if name not in best or dt < best[name]:
                 best[name] = dt
-    for name in headline:
+    for name in HEADLINE:
         timings[name] = round(best[name], 3)
 
     total = round(sum(timings.values()), 3)

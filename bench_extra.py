@@ -5,7 +5,7 @@ the per-query warm-minimum A/B methodology used while optimizing.
 
     python bench_extra.py queries [sf_dir] [sweeps] [name ...]
         Interleaved sweeps over the named declared queries (default: the
-        frozen bench's headline list), each executed to completion into the
+        headline list of bench.py), each executed to completion into the
         noop sink; prints per-sweep walls and the warm minimum. Interleaving
         matters on this VM: stall bands last minutes, so consecutive
         attempts of one query are correlated samples (see BASELINE.md).
@@ -30,18 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_nation_revenue",
-    "window_top_order_per_customer",
-    "events_hourly",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_pairs",
-    "ann_brute_topk",
-    "text_token_stats",
-    "text_fingerprint",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def _spark():

@@ -86,10 +86,6 @@ def _build_canonical_map(
     )
 
 
-def _canon_node(col, cmap_col):
-    return F.concat(F.lit("page:"), cmap_col.cast("string"))
-
-
 def alias_only(cmap: DataFrame) -> DataFrame:
     """The non-identity remnant of a canonical map — the only rows a rewrite
     join needs (identity rewrites fall out of the left-join `coalesce`).

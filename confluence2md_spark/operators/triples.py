@@ -1,9 +1,8 @@
 """Triple extraction H1-H4 (SURVEY.md §2.H) — all JVM-side.
 
 Every extractor is regexp_extract_all / arrays_zip / explode over the
-`pages` table: whole-stage codegen end-to-end, no Python. The patterns are
-shared with the pure-Python reference extractors in ``core.triples`` (unit
-tests pin that both paths agree on the same markdown).
+`pages` table: whole-stage codegen end-to-end, no Python. The patterns live
+in ``core.triples``.
 
 Edge vocabulary (BASELINE.json north_star):
   (page, links_to, page)            markdown links from F1/G8 output
@@ -23,19 +22,17 @@ from ..core.triples import (
     PAGE_URL_PATTERN,
 )
 
-# Java-dialect link pattern: images excluded via lookbehind (the pure-Python
-# extractor does the same with an explicit preceding-char check).
+# Java-dialect link pattern: images excluded via lookbehind.
 MD_LINK_PATTERN_J = r"(?<!\!)\[([^\]]*)\]\(([^)]+)\)"
 
 TRIPLE_COLS = ["subj", "pred", "obj", "subj_type", "obj_type", "doc_id", "repo", "confidence"]
 
 
-def _subj(df: DataFrame) -> Column:
-    return F.concat(F.lit("page:"), F.col("doc_id").cast("string"))
-
-
 def normalize_target_col(url: Column) -> Column:
-    """SQL twin of core.triples.normalize_link_target."""
+    """Canonical node id for a link target: Confluence page URLs ->
+    ``page:{id}``, attachment URLs -> ``file:{name}``, anchors ->
+    ``section:{anchor}``, anything else -> ``url:`` + the URL without its
+    fragment."""
     return (
         F.when(
             url.rlike(PAGE_URL_PATTERN),

@@ -5,6 +5,12 @@ Per stage we record one row per physical output partition:
 a JVM-side `groupBy(spark_partition_id())` — a map-side-combined count, no
 extra Python. Stage wall time is measured around the stage's action by the
 pipeline driver and stamped onto every partition row of that stage.
+
+Without the census (`census=False`, the pipeline's lean mode) a stage gets one
+row with `partition_id = -1`: the census is one extra full pass over the stage
+output, while `df.count()` of a freshly written parquet table is answered from
+footer statistics. The default keeps the census: K3 audit depth is a product
+feature, not a bench feature.
 """
 
 from __future__ import annotations
@@ -30,60 +36,21 @@ class LineageLog:
     """Append-only JSONL lineage sink (parquet/Iceberg `lineage` table on a
     cluster; JSONL locally keeps it readable and append-atomic)."""
 
-    def __init__(self, warehouse: str, run_id: str):
+    def __init__(self, warehouse: str, run_id: str, census: bool = True):
         self.run_id = run_id
+        self.census = census
         self.path = os.path.join(warehouse, "_lineage", f"{run_id}.jsonl")
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
 
     def record_stage(self, stage: str, df: DataFrame, wall_ms: float, status: str = "ok") -> int:
-        parts = partition_census(df)
-        ts = time.time()
-        total = 0
+        """Append the stage's lineage rows; returns its row count."""
+        parts = partition_census(df) if self.census else [{"partition_id": -1, "rows_out": df.count()}]
+        ts, wall_ms = time.time(), round(wall_ms, 1)
         with open(self.path, "a") as f:
             for p in parts:
-                total += p["rows_out"]
-                f.write(
-                    json.dumps(
-                        {
-                            "run_id": self.run_id,
-                            "stage": stage,
-                            "partition_id": p["partition_id"],
-                            "rows_out": p["rows_out"],
-                            "wall_ms": round(wall_ms, 1),
-                            "status": status,
-                            "ts": ts,
-                        }
-                    )
-                    + "\n"
-                )
-        return total
-
-    def record_stage_light(
-        self, stage: str, df: DataFrame, wall_ms: float, status: str = "ok"
-    ) -> int:
-        """Stage-level lineage row (partition_id = -1) without the
-        per-partition census. The census is one extra full pass over the
-        stage output; for a freshly written parquet table `df.count()` is
-        answered from footer statistics instead. Lean/throughput runs use
-        this; the default pipeline keeps the full census (K3 audit depth
-        is a product feature, not a bench feature)."""
-        total = df.count()
-        with open(self.path, "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "run_id": self.run_id,
-                        "stage": stage,
-                        "partition_id": -1,
-                        "rows_out": total,
-                        "wall_ms": round(wall_ms, 1),
-                        "status": status,
-                        "ts": time.time(),
-                    }
-                )
-                + "\n"
-            )
-        return total
+                row = {"run_id": self.run_id, "stage": stage, **p, "wall_ms": wall_ms, "status": status, "ts": ts}
+                f.write(json.dumps(row) + "\n")
+        return sum(p["rows_out"] for p in parts)
 
     def read(self) -> list[dict]:
         if not os.path.exists(self.path):

@@ -14,13 +14,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_cpus() -> int:
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _host_driver_memory() -> str:
+    """~40% of MemAvailable, at most 24g. In local mode the driver JVM IS the
+    cluster, and it shares the host with one Python worker per core plus the
+    page cache its parquet sinks go through; a fixed 24g heap outgrew a
+    15 GB host and was OOM-killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{max(1024, min(24 * 1024, int(kb * 0.4) // 1024))}m"
+
+
 def get_spark(
     app_name: str = "confluence2md-kg",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS') or _host_cpus()}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     b = (
@@ -40,9 +59,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # local mode = driver-only JVM: its heap IS the whole cluster memory.
         # 32 concurrent tasks × execution memory (hash maps, sorts) + cached
-        # broadcasts OOM'd at 8g on a 1.28M-doc run; the sandbox has 128 GiB,
-        # so size the single JVM like the N executors it stands in for.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # broadcasts OOM'd at 8g on a 1.28M-doc run, so the heap is sized
+        # from the host (see _host_driver_memory) rather than fixed.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

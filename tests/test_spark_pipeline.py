@@ -122,6 +122,50 @@ def test_dry_run_writes_nothing(spark, sf_dir, tmp_path):
     assert os.path.exists(os.path.join(wh, "_lineage", "dry1.jsonl"))
 
 
+def test_resume_refuses_changed_input(spark, sf_dir, tmp_path):
+    """A run_id checkpointed from one input must not resume over another: the
+    manifests' input fingerprint no longer matches, so the build raises
+    instead of reading back stale stages."""
+    wh = str(tmp_path / "fpwh")
+    raw = synth_raw_files(spark, sf_dir)
+    build_kg(spark, raw.filter("doc_id < 250"), wh, run_id="fp")
+    with pytest.raises(ValueError, match="stage 'pages' of run_id 'fp'"):
+        build_kg(spark, synth_raw_files(spark, sf_dir), wh, run_id="fp")
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, descending into AQE's final plan and its
+    query stages."""
+    yield node
+    kids = [node.children().apply(i) for i in range(node.children().size())]
+    if node.nodeName() == "AdaptiveSparkPlan":
+        kids.append(node.executedPlan())
+    elif node.nodeName().endswith("QueryStage"):
+        kids.append(node.plan())
+    for kid in kids:
+        yield from _plan_nodes(kid)
+
+
+def test_pages_prefilter_stays_above_exchange(spark, sf_dir):
+    """The pages pushdown barrier: over a derived-content corpus the detect
+    Filter must run above the exchange that spreads the corpus, not pushed
+    into the scan (or crossJoin) stage beneath it, where the content would
+    be synthesized and tested on a single partition."""
+    from confluence2md_spark.plans.pipeline import pages_stage
+
+    pages = pages_stage(synth_raw_files(spark, sf_dir), num_partitions=4)
+    assert len(pages.collect()) == 454
+    root = pages._jdf.queryExecution().executedPlan()
+    detect = [
+        n
+        for n in _plan_nodes(root)
+        if n.nodeName() == "Filter" and "Exported From Confluence" in n.condition().toString()
+    ]
+    assert detect
+    for f in detect:
+        assert any("Exchange" in n.nodeName() or n.nodeName() == "ShuffleQueryStage" for n in _plan_nodes(f))
+
+
 def test_mime_parts_explode(spark, sf_dir):
     from confluence2md_spark.operators.mimeparts import explode_mime_parts, select_html_parts
 
